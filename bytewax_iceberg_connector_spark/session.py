@@ -8,12 +8,35 @@ Scale notes (100 TB / 1000 executors):
 - AQE on: runtime coalescing of small shuffle partitions, skew-join splitting,
   and dynamic join-strategy demotion are what keep a static plan honest at
   scale. We enable it unconditionally.
-- ``spark.sql.shuffle.partitions`` is a *local* default (32 = test box cores);
-  on a real cluster AQE's coalescing makes the initial number mostly a ceiling
-  — set it to 2-3x total cores there.
+- ``spark.sql.shuffle.partitions`` is a *local* default: one per core of
+  the ``local[...]`` master, both taken from ``SPARK_GRAFT_CPUS`` or else
+  the CPUs this process may run on (``os.sched_getaffinity``). On a real
+  cluster AQE's coalescing makes the initial number mostly a ceiling — set
+  it to 2-3x total cores there.
 - Arrow transfer on: every pandas_udf / toPandas boundary is Arrow-batched,
   the Spark-native analogue of the reference's row-buffer→Arrow flush
   (reference connector.py:232-237).
+
+Python worker daemon: ``get_spark`` sets ``spark.python.daemon.module`` to
+``bytewax_iceberg_connector_spark._pydaemon``. At the start of every task
+pyspark's worker calls ``importlib.invalidate_caches()``, which on CPython
+3.11 makes every zip importer re-read its whole archive directory:
+``pyspark.zip``, the py4j zip and the spark-core jar, none of which change
+during a session. That cost 200-280 ms per task (4-core host, CPython
+3.11.7): a 1-task Python RDD ``map`` took 0.25-0.31 s against 0.07-0.09 s
+for a 1-task JVM ``collect``. The daemon module patches the workers to
+re-read an archive only when its mtime, size or inode changed, and the same
+job then takes 0.09-0.14 s (``tools/worker_tax.py``). Consequences:
+
+- Worker interpreters must be able to import this package (the repo root
+  on ``PYTHONPATH``, or the working directory), as engine UDFs already
+  require; otherwise no Python worker starts.
+- ``spark.python.use.daemon=false`` bypasses the module: workers are then
+  launched directly and keep the per-task re-read.
+- On CPython >= 3.13 the invalidation is already lazy, so the patch saves
+  nothing there, and does no harm.
+- A caller's own ``spark.python.daemon.module`` passed to ``get_spark``
+  wins, like every ``extra_conf`` key.
 """
 
 from __future__ import annotations
@@ -101,12 +124,22 @@ _TUNING_CONF = {
 
 _TUNING_SENTINEL = "spark.bytewax_iceberg.tuningApplied"
 
+
+def _default_cpus() -> str:
+    """SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        return os.environ["SPARK_GRAFT_CPUS"]
+    if hasattr(os, "sched_getaffinity"):
+        return str(len(os.sched_getaffinity(0)))
+    return str(os.cpu_count())
+
+
 _BUILD_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # local[32] box: one shuffle partition per core; AQE coalesces below this
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    # one shuffle partition per local core; AQE coalesces below this
+    "spark.sql.shuffle.partitions": _default_cpus(),
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     # local mode runs everything in the driver JVM; the 1g default heap
     # thrashes GC under 32 concurrent tasks + Arrow batches (observed 5x
@@ -125,6 +158,9 @@ _BUILD_CONF = {
     # hundred-query sessions stall multi-seconds when cleanup finally lands.
     # Force the cleaner's periodic GC every minute (default 30min).
     "spark.cleaner.periodicGC.interval": "1min",
+    # Python workers skip re-reading unchanged import archives on every
+    # task (see _pydaemon and the module docstring)
+    "spark.python.daemon.module": "bytewax_iceberg_connector_spark._pydaemon",
 }
 
 
@@ -154,6 +190,16 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _builder_conf(extra_conf: dict[str, str]) -> dict[str, str]:
+    """Every conf ``get_spark`` sets on the builder.
+
+    The tuning defaults are applied with ``extra_conf`` taking precedence;
+    the sentinel stops ensure_engine_conf from re-applying them over a
+    caller's explicit override."""
+    return {**_BUILD_CONF, **_RUNTIME_CONF, **_TUNING_CONF,
+            _TUNING_SENTINEL: "true", **extra_conf}
+
+
 def get_spark(
     app_name: str = "bytewax-iceberg-spark",
     master: str | None = None,
@@ -161,14 +207,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine."""
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{_default_cpus()}]"
     builder = SparkSession.builder.master(master).appName(app_name)
-    # the builder applies tuning defaults with extra_conf taking
-    # precedence; the sentinel stops ensure_engine_conf from re-applying
-    # them over a caller's explicit override
-    for k, v in {**_BUILD_CONF, **_RUNTIME_CONF, **_TUNING_CONF,
-                 _TUNING_SENTINEL: "true", **extra_conf}.items():
+    for k, v in _builder_conf(extra_conf).items():
         builder = builder.config(k, str(v))
     spark = builder.getOrCreate()
     return ensure_engine_conf(spark)

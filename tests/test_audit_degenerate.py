@@ -145,3 +145,27 @@ def test_semantic_audit_planted_identical_vectors_are_dropped(spark, tmp_path):
         and r.cells_ok == 1
     )
     _diff(sp, _oracle(tmp_path, L._SQL_SEMANTIC_AUDIT))
+
+
+def test_semantic_null_labels_ride_through_assign_carry(spark, tmp_path):
+    """NULL vector labels cross the fused assign kernel (``_assign_carry``)
+    as an Arrow int column with nulls, i.e. pandas float NaN, and must come
+    back out as int nulls; ``_prune_cell`` buckets them as label -1. Four
+    in five labels are NULL, so some cell's top label must be the -1
+    bucket (ties go to -1, the smaller value), and the audit built on the
+    same kernel must still match its oracle."""
+    n = 40
+    adm = _admitted_ids(n)
+    vecs = [[1.0 if j == i else 0.0 for j in range(n)] for i in range(n)]
+    for a, b in zip(adm[:3], adm[-3:]):
+        vecs[b] = vecs[a][:]
+    labels = [7 if i % 5 == 0 else None for i in range(n)]
+    d = _emb_dir(tmp_path, vecs, labels)
+    cells = L._semantic_cells(spark, d).toPandas()
+    assert cells.n_members.sum() == n
+    assert set(cells.top_label) <= {-1, 7} and -1 in set(cells.top_label)
+    sp = L.semantic_dedup(spark, d).toPandas()
+    r = sp.iloc[0]
+    assert r.n_vectors == len(adm) and r.n_dup_reach == 3
+    assert r.members_conserved == 1 and r.dropped_bounded == 1
+    _diff(sp, _oracle(tmp_path, L._SQL_SEMANTIC_AUDIT))

@@ -44,7 +44,7 @@ def main():
         warm[n] = round(best, 3)
         spark.catalog.clearCache()
     print(json.dumps({
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": str(spark.sparkContext.defaultParallelism),
         "cold": cold, "warm": warm,
         "total_cold": round(sum(cold.values()), 3),
         "total_warm": round(sum(warm.values()), 3),
